@@ -87,9 +87,9 @@ Storage layout (all under ``index_dir``)::
     hot/v<N>/_IDX_BUCKET=<b>/...       copy-on-write, b = hash(shingle)
     pairs/v<N>/_IDX_BUCKET=<b>/...     copy-on-write, b = hash(doc_a)
 
-The manifest flips LAST (atomic rename), so a crashed operation leaves
-the previous version fully readable. Log tables are SEGMENTED by the
-writing operation's version and reads are manifest-gated (only
+The manifest flips LAST (``versioned.commit``), so a crashed operation
+leaves the previous version fully readable. Log tables are SEGMENTED by
+the writing operation's version and reads are manifest-gated (only
 segments ``v <= manifest.version`` are visible), so a crashed
 operation's orphan segment is invisible and a RETRY of the same batch
 overwrites it instead of double-appending — the idempotence the COW
@@ -115,6 +115,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import versioned
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     SHINGLE_DOC_FREQ_CAP,
@@ -132,28 +133,33 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import
 IDX_BUCKET = "_IDX_BUCKET"
 
 
-def _run_concurrently(jobs) -> None:
+def _run_concurrently(jobs) -> list:
     """Run independent write jobs from driver threads so their Spark
     jobs schedule concurrently (SparkSession is thread-safe; each job's
     inputs are cached frames or snapshot-pinned file lists, so ordering
     within the group is immaterial). Serial submission pays one per-job
     scheduling floor per table — the dominant micro-batch ingest cost
-    on an otherwise idle cluster. Exceptions propagate (first raised
-    wins) but siblings are NOT cancelled — a failed operation may leave
-    any subset of its group's writes on disk. That partial state is
-    harmless by construction: COW versions and log segments both land
-    in not-yet-committed ``v{new}`` dirs that reads (manifest-gated)
-    cannot see, and a retry overwrites them — see ``_append``."""
+    on an otherwise idle cluster. Returns the jobs' results in order.
+    Every job runs to completion before anything is raised, so no
+    failure hides behind another: the first failing job's exception
+    propagates with the others attached as notes. Siblings are NOT
+    cancelled — a failed operation may leave any subset of its group's
+    writes on disk. That partial state is harmless by construction: COW
+    versions and log segments both land in not-yet-committed ``v{new}``
+    dirs that reads (manifest-gated) cannot see, and a retry overwrites
+    them — see ``_append``."""
     if len(jobs) <= 1:
-        for j in jobs:
-            j()
-        return
+        return [j() for j in jobs]
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
         futures = [ex.submit(j) for j in jobs]
-        for f in futures:
-            f.result()
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(f"concurrent job also failed: {other!r}")
+        raise errors[0]
+    return [f.result() for f in futures]
 
 
 def _shingle_batch(docs: DataFrame) -> DataFrame:
@@ -237,9 +243,7 @@ class MinHashLshIndex:
     def _commit(self, manifest: dict) -> None:
         manifest["n_buckets"] = self.n_buckets
         manifest["layout"] = self.LAYOUT_VERSION
-        tmp = os.path.join(self.dir, "manifest.json.tmp")
-        json.dump(manifest, open(tmp, "w"))
-        os.replace(tmp, os.path.join(self.dir, "manifest.json"))
+        versioned.commit(os.path.join(self.dir, "manifest.json"), manifest)
 
     # bucket exprs — the single source of truth for the disk layout
     def _doc_bucket(self, col: str = "doc_id"):
@@ -298,13 +302,7 @@ class MinHashLshIndex:
         it sits at ``v{upto+1}`` until the retry overwrites it and the
         retry's commit makes it real."""
         tdir = os.path.join(self.dir, name)
-        if not os.path.isdir(tdir):
-            return []
-        out = []
-        for d in os.listdir(tdir):
-            if d.startswith("v") and d[1:].isdigit() and int(d[1:]) <= upto:
-                out.append(int(d[1:]))
-        return sorted(out)
+        return [v for v in versioned.versions(tdir) if v <= upto]
 
     def _read_append(
         self, name: str, schema: str, buckets: list[int] | None = None
@@ -384,56 +382,19 @@ class MinHashLshIndex:
         )
         old_v = self._cow_version(name)
         if old_v > 0:
-            old = self._cow_path(name, old_v)
-            touched_set = set(touched)
-            for dname in os.listdir(old):
-                if not dname.startswith(f"{IDX_BUCKET}="):
-                    continue
-                if int(dname.split("=", 1)[1]) in touched_set:
-                    continue
-                src_dir, dst_dir = os.path.join(old, dname), os.path.join(out, dname)
-                os.makedirs(dst_dir, exist_ok=True)
-                for fname in os.listdir(src_dir):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    try:
-                        os.link(
-                            os.path.join(src_dir, fname),
-                            os.path.join(dst_dir, fname),
-                        )  # zero-copy: same inode
-                    except OSError:
-                        shutil.copy2(
-                            os.path.join(src_dir, fname),
-                            os.path.join(dst_dir, fname),
-                        )
+            versioned.link_unchanged(
+                self._cow_path(name, old_v), out, f"{IDX_BUCKET}=", touched
+            )
 
     def _retire_cow_versions(self) -> None:
-        """Retire COW versions relative to each table's MANIFEST-COMMITTED
-        version, never the directory listing: a crashed operation's
-        orphan dir can outrank the committed version, and a
-        listing-based "keep newest two" would retire the committed dir
-        while keeping orphans — ``_cow_read`` would then silently return
-        an empty view. Keep the committed dir plus the highest dir below
-        it (in-flight readers of the previous version); delete everything
-        else, INCLUDING orphans above the committed version — the COW
-        analog of ``_clear_orphan_segments`` (a crashed op's retry
-        rewrites its own version dir with mode=overwrite anyway). Hard
-        links keep inodes shared with the previous version alive."""
+        """Keep each COW table's MANIFEST-COMMITTED version plus the one
+        below it (in-flight readers); a crashed operation's orphan dir
+        can outrank the committed version, so retirement never keys on
+        the directory listing (``versioned.retire``)."""
         for name in ("df", "hot", "pairs"):
-            tdir = os.path.join(self.dir, name)
-            if not os.path.isdir(tdir):
-                continue
-            committed = self._cow_version(name)
-            vs = sorted(
-                int(d[1:])
-                for d in os.listdir(tdir)
-                if d.startswith("v") and d[1:].isdigit()
+            versioned.retire(
+                os.path.join(self.dir, name), self._cow_version(name), keep=2
             )
-            below = [v for v in vs if v < committed]
-            keep = {committed, below[-1]} if below else {committed}
-            for v in vs:
-                if v not in keep:
-                    shutil.rmtree(self._cow_path(name, v), ignore_errors=True)
 
     # -- shared read helpers --------------------------------------------
 
@@ -691,27 +652,17 @@ class MinHashLshIndex:
         # cands append stays in the FINAL wave: it reads `new_cands`,
         # which the probe is materializing — running them concurrently
         # would compute the candidate join twice (cache race).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            f_probe = ex.submit(_probe)
-            f_logs = [
-                ex.submit(
-                    lambda: self._append(
-                        "shingles", batch_sh, self._doc_bucket(),
-                        version=new_version,
-                    )
+        cross_and_vk = _run_concurrently(
+            [
+                _probe,
+                lambda: self._append(
+                    "shingles", batch_sh, self._doc_bucket(), version=new_version
                 ),
-                ex.submit(
-                    lambda: self._append(
-                        "bands", batch_bands, self._band_bucket(),
-                        version=new_version,
-                    )
+                lambda: self._append(
+                    "bands", batch_bands, self._band_bucket(), version=new_version
                 ),
             ]
-            cross_and_vk = f_probe.result()
-            for f in f_logs:
-                f.result()
+        )[0]
         n_crossing = next(int(r["b"]) for r in cross_and_vk if r["t"] == "x")
 
         hot_old = self._cow_read("hot", "shingle string")

@@ -18,6 +18,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the memory available now, capped at 24g: a fixed large heap
+    on a small box lets the JVM grow until the kernel kills it."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(x.split()[1]) for x in f if x.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "cdc-analytics-engine",
     shuffle_partitions: int | None = None,
@@ -26,6 +37,8 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``SPARK_GRAFT_CPUS`` (driver contract) controls local parallelism.
+    ``SPARK_DRIVER_MEMORY`` sets the Spark driver heap (default: half of
+    ``MemAvailable``, at most 24g).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -41,7 +54,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

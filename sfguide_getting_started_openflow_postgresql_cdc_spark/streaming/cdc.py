@@ -20,15 +20,20 @@ contract (SURVEY.md §2.I, §3 entry 2):
 
 Design for scale
 ----------------
-Plain parquet has no MERGE, so each replica is a versioned directory with
-an atomically-swapped pointer file (write-new-version, ``os.replace`` the
-pointer). Each version is PARTITIONED BY a PK hash bucket
+Plain parquet has no MERGE, so each replica is a set of ``v<N>``
+version directories behind a pointer file, committed through the
+package's one versioned-state protocol (``versioned.py``: write the new
+version, durably replace the pointer, retire by the committed version).
+Each version is PARTITIONED BY a PK hash bucket
 (``_CDC_BUCKET = pmod(xxhash64(pk), n_buckets)``): a merge rewrites only
 the buckets that contain changed keys and hard-links every untouched
 bucket's files from the previous version — copy-on-write at bucket
 granularity, NOT table granularity. At 100 TB with thousands of buckets
 a 1-minute sync interval rewrites only the few GB its keys actually
 touch; the whole-table rewrite this replaces cannot ship 100 TB/minute.
+Every committed version stays a complete snapshot, so consumers such as
+the MVs (``streaming/mv.py``) difference a batch by reading its keys at
+the version before and the version after the merge (time travel).
 
 The merge itself is pure DataFrame algebra:
 
@@ -62,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas
+from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas, versioned
 
 # Raw JSONL change-event envelope: ``after`` is a string map so one
 # schema carries every table's events; per-table projection casts each
@@ -89,23 +94,27 @@ ENVELOPE = T.StructType(
 
 
 class ReplicaStore:
-    """Versioned, PK-hash-bucketed parquet replica tables with an atomic
-    pointer swap.
+    """Versioned, PK-hash-bucketed parquet replica tables, committed
+    through ``versioned.py``.
 
     Layout::
 
         root/tables/<table>/v<N>/_CDC_BUCKET=<i>/*.parquet
         root/tables/<table>/_POINTER.json
-            {"version": N, "watermark": seq, "n_buckets": B}
+            {"version": N, "watermark": seq, "n_buckets": B, "schema": ...,
+             "watermarks": {retained version: its watermark}}
         root/journal/<table>/*.parquet      (append-only event log)
 
     Readers resolve the pointer, so a crash mid-write never exposes a
-    half-written version; the watermark records the highest applied
-    ``seq_no`` for idempotent replay. A merge writes ONLY the buckets
-    containing changed keys into the new version and hard-links every
-    other bucket's files from the previous version (same inode, zero
-    bytes copied) — version retirement is safe because links keep the
-    shared inodes alive.
+    half-written version, and the retried write overwrites the orphan.
+    The watermark records the highest applied ``seq_no`` and never goes
+    backwards. A merge writes ONLY the buckets containing changed keys
+    into the new version and hard-links every other bucket's files from
+    the previous version (same inode, zero bytes copied) — version
+    retirement is safe because links keep the shared inodes alive.
+    ``version()`` names the committed version; ``read`` and
+    ``read_buckets`` time-travel to any of the ``keep_versions``
+    retained ones.
     """
 
     def __init__(self, root: str, keep_versions: int = 2):
@@ -117,8 +126,11 @@ class ReplicaStore:
         os.makedirs(os.path.join(root, "journal"), exist_ok=True)
 
     # -- pointer ----------------------------------------------------------
+    def _table_dir(self, table: str) -> str:
+        return os.path.join(self.root, "tables", table)
+
     def _pointer_path(self, table: str) -> str:
-        return os.path.join(self.root, "tables", table, "_POINTER.json")
+        return os.path.join(self._table_dir(table), "_POINTER.json")
 
     def _pointer(self, table: str) -> dict:
         try:
@@ -130,6 +142,10 @@ class ReplicaStore:
     def watermark(self, table: str) -> int:
         return int(self._pointer(table)["watermark"])
 
+    def version(self, table: str) -> int:
+        """Committed version number (-1 before bootstrap)."""
+        return int(self._pointer(table)["version"])
+
     def n_buckets(self, table: str) -> int:
         return int(self._pointer(table).get("n_buckets", 0))
 
@@ -138,7 +154,7 @@ class ReplicaStore:
         if ptr["version"] < 0:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
         v = ptr["version"] if version is None else version
-        path = os.path.join(self.root, "tables", table, f"v{v}")
+        path = os.path.join(self._table_dir(table), f"v{v}")
         if version is not None and not os.path.isdir(path):
             raise FileNotFoundError(
                 f"replica '{table}' version {version} retired or never written "
@@ -146,27 +162,16 @@ class ReplicaStore:
             )
         return path
 
-    def _write_version_meta(self, out: str, version: int, watermark: int) -> None:
-        with open(os.path.join(out, "_VERSION.json"), "w") as f:
-            json.dump({"version": version, "watermark": watermark}, f)
-
     def version_watermarks(self, table: str) -> dict[int, int]:
         """{version: watermark} for every RETAINED version — the map that
-        lets readers time-travel by watermark instead of version number."""
-        out = {}
-        for v in self.versions(table):
-            meta = os.path.join(
-                self.root, "tables", table, f"v{v}", "_VERSION.json"
-            )
-            try:
-                with open(meta) as f:
-                    out[v] = int(json.load(f)["watermark"])
-            except FileNotFoundError:
-                # versions written before watermark stamping: only the
-                # current one has a known watermark (the pointer's)
-                if v == self._pointer(table)["version"]:
-                    out[v] = int(self._pointer(table)["watermark"])
-        return out
+        lets readers time-travel by watermark instead of version number.
+        Each commit records it in the pointer, so a crashed writer's
+        orphan version never appears in it."""
+        ptr = self._pointer(table)
+        if ptr["version"] < 0:
+            return {}
+        recorded = ptr.get("watermarks", {str(ptr["version"]): ptr["watermark"]})
+        return {int(v): int(wm) for v, wm in recorded.items()}
 
     def version_at_watermark(self, table: str, max_watermark: int) -> int:
         """Newest retained version whose watermark <= max_watermark."""
@@ -183,12 +188,7 @@ class ReplicaStore:
 
     def versions(self, table: str) -> list[int]:
         """Retained version numbers, oldest first (time-travel targets)."""
-        tdir = os.path.join(self.root, "tables", table)
-        if not os.path.isdir(tdir):
-            return []
-        return sorted(
-            int(n[1:]) for n in os.listdir(tdir) if n.startswith("v") and n[1:].isdigit()
-        )
+        return versioned.versions(self._table_dir(table))
 
     def _stored_schema(self, table: str) -> T.StructType | None:
         raw = self._pointer(table).get("schema")
@@ -219,39 +219,37 @@ class ReplicaStore:
         )
 
     def read_buckets(
-        self, spark: SparkSession, table: str, buckets: list[int]
+        self,
+        spark: SparkSession,
+        table: str,
+        buckets: list[int],
+        version: int | None = None,
     ) -> DataFrame:
-        """Only the named buckets — the filter prunes whole partition
-        directories at the source listing, so a merge never scans the
-        untouched part of the replica."""
-        df = self._reader(spark, table).parquet(self.table_path(table))
+        """Only the named buckets (of ``version``, default current) — the
+        filter prunes whole partition directories at the source listing,
+        so a merge never scans the untouched part of the replica."""
+        df = self._reader(spark, table).parquet(self.table_path(table, version))
         return df.filter(F.col(CDC_BUCKET).isin(buckets)).drop(CDC_BUCKET)
 
-    def _swap_pointer(
-        self,
-        table: str,
-        version: int,
-        watermark: int,
-        n_buckets: int,
-        schema: T.StructType | None = None,
-    ) -> None:
-        if schema is None:  # merges keep the bootstrap-recorded schema
-            raw = self._pointer(table).get("schema")
-        else:
-            raw = json.dumps(schema.jsonValue())
-        tmp = self._pointer_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "version": version,
-                    "watermark": watermark,
-                    "n_buckets": n_buckets,
-                    "schema": raw,
-                    "written_at": time.time(),
-                },
-                f,
-            )
-        os.replace(tmp, self._pointer_path(table))  # atomic swap
+    def _publish(self, table: str, version: int, watermark: int, **fields) -> None:
+        """Commit the pointer to ``v<version>`` (``fields`` override
+        pointer entries such as the schema), then retire versions beyond
+        ``keep_versions`` (current + in-flight readers + time-travel
+        targets). The pointer carries the retained versions' watermarks."""
+        wms = {**self.version_watermarks(table), version: watermark}
+        retained = sorted(wms)[-self.keep_versions:]
+        versioned.commit(
+            self._pointer_path(table),
+            {
+                **self._pointer(table),
+                "version": version,
+                "watermark": watermark,
+                "watermarks": {str(v): wms[v] for v in retained},
+                **fields,
+                "written_at": time.time(),
+            },
+        )
+        versioned.retire(self._table_dir(table), version, self.keep_versions)
 
     def update_schema(self, table: str, schema: T.StructType) -> None:
         """Re-point the stored read schema without touching data files
@@ -261,22 +259,10 @@ class ReplicaStore:
         ptr = self._pointer(table)
         if ptr["version"] < 0:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        self._swap_pointer(
-            table,
-            ptr["version"],
-            ptr["watermark"],
-            ptr["n_buckets"],
-            schema=schema,
+        versioned.commit(
+            self._pointer_path(table),
+            {**ptr, "schema": json.dumps(schema.jsonValue())},
         )
-
-    def _retire_old_versions(self, tdir: str, new_version: int) -> None:
-        # retire versions beyond the keep_versions retention window
-        # (current + in-flight readers + time-travel targets); hard-linked
-        # files shared with newer versions keep their inode
-        horizon = new_version - (self.keep_versions - 1)
-        for name in os.listdir(tdir):
-            if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < horizon:
-                shutil.rmtree(os.path.join(tdir, name), ignore_errors=True)
 
     def write_full(
         self,
@@ -288,15 +274,17 @@ class ReplicaStore:
     ) -> None:
         """Write a complete new version (bootstrap / bucket-count change).
         ``df`` must carry the ``_CDC_BUCKET`` column."""
-        ptr = self._pointer(table)
-        new_version = ptr["version"] + 1
-        tdir = os.path.join(self.root, "tables", table)
-        os.makedirs(tdir, exist_ok=True)
-        out = os.path.join(tdir, f"v{new_version}")
-        df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        self._write_version_meta(out, new_version, watermark)
-        self._swap_pointer(table, new_version, watermark, n_buckets, schema=df.schema)
-        self._retire_old_versions(tdir, new_version)
+        new_version = self.version(table) + 1
+        df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(
+            os.path.join(self._table_dir(table), f"v{new_version}")
+        )
+        self._publish(
+            table,
+            new_version,
+            watermark,
+            n_buckets=n_buckets,
+            schema=json.dumps(df.schema.jsonValue()),
+        )
 
     def write_merged(
         self,
@@ -310,6 +298,8 @@ class ReplicaStore:
         must cover exactly ``changed_buckets`` and carry ``_CDC_BUCKET``)
         and hard-links every other bucket directory from the current
         version — the copy-on-write path a 1-minute sync interval takes.
+        The committed watermark never goes backwards: a batch of only
+        late events keeps the previous one.
 
         On a distributed filesystem without hard links the same contract
         is 'reference the previous version's files in the new manifest'
@@ -317,32 +307,13 @@ class ReplicaStore:
         ptr = self._pointer(table)
         if ptr["version"] < 0:
             raise FileNotFoundError(f"replica '{table}' not bootstrapped")
-        n_buckets = int(ptr["n_buckets"])
-        tdir = os.path.join(self.root, "tables", table)
-        old = os.path.join(tdir, f"v{ptr['version']}")
         new_version = ptr["version"] + 1
-        out = os.path.join(tdir, f"v{new_version}")
+        out = os.path.join(self._table_dir(table), f"v{new_version}")
         changed_df.write.mode("overwrite").partitionBy(CDC_BUCKET).parquet(out)
-        self._write_version_meta(out, new_version, watermark)
-        changed = set(changed_buckets)
-        for name in os.listdir(old):
-            if not name.startswith(f"{CDC_BUCKET}="):
-                continue
-            bucket = int(name.split("=", 1)[1])
-            if bucket in changed:
-                continue
-            src_dir = os.path.join(old, name)
-            dst_dir = os.path.join(out, name)
-            os.makedirs(dst_dir, exist_ok=True)
-            for fname in os.listdir(src_dir):
-                src = os.path.join(src_dir, fname)
-                dst = os.path.join(dst_dir, fname)
-                try:
-                    os.link(src, dst)  # zero-copy: same inode
-                except OSError:
-                    shutil.copy2(src, dst)  # cross-device fallback
-        self._swap_pointer(table, new_version, watermark, n_buckets)
-        self._retire_old_versions(tdir, new_version)
+        versioned.link_unchanged(
+            self.table_path(table), out, f"{CDC_BUCKET}=", changed_buckets
+        )
+        self._publish(table, new_version, max(int(ptr["watermark"]), watermark))
 
     def journal_path(self, table: str) -> str:
         return os.path.join(self.root, "journal", table)

@@ -42,20 +42,22 @@ over the DUMP only; the benchmark gram set broadcasts (eval suites are
 tiny); the fingerprint-log read is bucket-pruned to the dump's
 fingerprint hash buckets; every stored aggregate (manifest, totals,
 stats) is group-cardinality, orders below the corpus. Writes land in
-tmp dirs and rename into place, meta last, so a crashed ingest leaves
-the previous state readable; a retry of the same dump is rejected by
-the doc_id watermark instead of double-counting.
+uncommitted ``v<N>`` dirs and the meta commits last
+(``versioned.commit``), so a crashed ingest leaves the previous state
+readable; a retry of the same dump is rejected by the doc_id watermark
+instead of double-counting.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from sfguide_getting_started_openflow_postgresql_cdc_spark import versioned
 
 FP_BUCKET = "_FP_BUCKET"
 
@@ -105,9 +107,7 @@ class IncrementalCurationManifest:
 
     def _commit_meta(self, meta: dict) -> None:
         meta["n_buckets"] = self.n_buckets
-        tmp = os.path.join(self.path, "meta.json.tmp")
-        json.dump(meta, open(tmp, "w"))
-        os.replace(tmp, os.path.join(self.path, "meta.json"))
+        versioned.commit(os.path.join(self.path, "meta.json"), meta)
 
     def _write(self, name: str, df: DataFrame, version: int) -> None:
         """Write version ``version`` of a table; it becomes visible only
@@ -123,29 +123,6 @@ class IncrementalCurationManifest:
         if v > 0 and os.path.isdir(p):
             return self.spark.read.schema(schema).parquet(p)
         return self.spark.createDataFrame([], schema)
-
-    def _retire_versions(self, meta: dict) -> None:
-        """Keep each table's committed version plus the one below it
-        (in-flight readers of the previous state); drop everything else,
-        INCLUDING orphans above the committed version from crashed
-        ingests — retirement keys on the meta's table map, never the
-        directory listing (the dedup-index retirement rule)."""
-        for name, v in meta.get("tables", {}).items():
-            tdir = os.path.join(self.path, name)
-            if not os.path.isdir(tdir):
-                continue
-            vs = sorted(
-                int(d[1:])
-                for d in os.listdir(tdir)
-                if d.startswith("v") and d[1:].isdigit()
-            )
-            below = [x for x in vs if x < v]
-            keep = {v} | ({below[-1]} if below else set())
-            for x in vs:
-                if x not in keep:
-                    shutil.rmtree(
-                        os.path.join(tdir, f"v{x}"), ignore_errors=True
-                    )
 
     def _fp_bucket(self, col: str = "f"):
         return F.pmod(F.xxhash64(F.col(col)), F.lit(self.n_buckets))
@@ -744,7 +721,10 @@ class IncrementalCurationManifest:
                 + [list(r) for r in new_ranges],
             }
             self._commit_meta(new_meta)
-            self._retire_versions(new_meta)
+            # each table's committed version plus the one below it
+            # (in-flight readers); orphans of crashed ingests go too
+            for name, v in tables.items():
+                versioned.retire(os.path.join(self.path, name), v, keep=2)
             return metrics
         finally:
             # ADVICE r9: release EVERY frame persisted this attempt even

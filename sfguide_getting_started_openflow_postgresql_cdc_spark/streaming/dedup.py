@@ -236,6 +236,7 @@ def neardup_filter_batch_indexed(
     import os
     import uuid
 
+    from sfguide_getting_started_openflow_postgresql_cdc_spark import versioned
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
         _shingle_batch,
     )
@@ -321,9 +322,7 @@ def neardup_filter_batch_indexed(
                 )
             sigs.unpersist()
         applied[run_key] = max(applied.get(run_key, -1), epoch_id)
-        tmp = epochs_path + ".tmp"
-        json.dump(applied, open(tmp, "w"))
-        os.replace(tmp, epochs_path)
+        versioned.commit(epochs_path, applied)
         return accepted
     finally:
         batch_sh.unpersist()

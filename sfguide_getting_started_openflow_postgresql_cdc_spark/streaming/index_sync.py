@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from sfguide_getting_started_openflow_postgresql_cdc_spark import versioned
+
 
 def _newly_deleted_keys(
     spark: SparkSession,
@@ -105,7 +107,5 @@ def sync_soft_deletes(
         raise TypeError(f"no retraction surface on {type(index).__name__}")
 
     os.makedirs(os.path.dirname(state_path) or ".", exist_ok=True)
-    tmp = state_path + ".tmp"
-    json.dump({"applied_watermark": upto}, open(tmp, "w"))
-    os.replace(tmp, state_path)
+    versioned.commit(state_path, {"applied_watermark": upto})
     return {"applied_watermark": upto, "retracted": n}

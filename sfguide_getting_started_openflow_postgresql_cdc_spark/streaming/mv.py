@@ -4,39 +4,45 @@ The reference pipeline recomputes its dashboards from the replica on
 every query (sql/3.live_appointments.sql:111-161 re-runs status counts
 after each sync). This module maintains a grouped aggregate as a
 DELTA-merged table instead: after each ``merge_batch``, only the rows
-whose primary keys appeared in the batch are re-read (bucket-pruned —
-the same partition pruning the merge itself uses), their before/after
-group contributions are differenced, and the tiny delta is merged into
-the stored aggregate.
+whose primary keys appeared in the batch are read (bucket-pruned — the
+same partition pruning the merge itself uses) at the replica version
+before the merge and at the version it committed, their group
+contributions are differenced, and the tiny delta is folded into the
+stored aggregate.
 
 Cost model at 100 TB: the batch touches K keys across B changed
-buckets; maintenance reads O(B buckets) once more and shuffles
+buckets; maintenance reads those B buckets at two versions and shuffles
 O(groups-in-batch) delta rows — the base table is never rescanned.
-A full refresh would scan 100 TB per sync interval; this scans the
-changed buckets twice (merge + MV delta).
+A full refresh would scan 100 TB per sync interval.
 
 Correctness under CDC semantics:
 - soft deletes leave the row in the replica but remove it from the
-  aggregate (``_DELETED`` filter on both the before and after reads);
+  aggregate (``_DELETED`` filter on both version reads);
 - group-changing UPDATEs move the row between groups (−1 old, +1 new);
-- out-of-order / replayed batches are safe because the before/after
-  states are read AROUND the guarded merge — whatever the per-row
-  ``_CDC_SEQ`` guard actually applied is exactly what is differenced;
+- out-of-order / replayed batches are safe because the delta is the
+  difference of two COMMITTED replica versions — whatever the per-row
+  ``_CDC_SEQ`` guard actually applied between them is exactly what is
+  differenced;
+- exactly-once across crashes: each MV version lives in ``v<N>`` under
+  ``path`` and its pointer (``versioned.commit``) records the replica
+  version it reflects. A merge differences v_prev -> v_new only when
+  the MV reflects v_prev; otherwise (a crash between the replica and
+  MV commits followed by a replay, or a merge that bypassed the MV) it
+  recomputes with ``initialize``, which is always correct;
 - groups whose count reaches zero are dropped from the store so the
   MV equals a fresh GROUP BY at every point.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas
+from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas, versioned
 from sfguide_getting_started_openflow_postgresql_cdc_spark.streaming.cdc import CdcEngine
 
 
@@ -53,7 +59,8 @@ class IncrementalGroupCount:
     Subclasses add measures by overriding ``_measures()`` — a list of
     (name, aggregate-expression) pairs folded through the same delta
     machinery; ``n`` (the live-row count) must stay first, because group
-    existence (and MV-row retirement) is decided by ``n != 0``.
+    existence (and MV-row retirement) is decided by ``n != 0``. A
+    measure the negate-and-sum fold cannot maintain overrides ``_fold``.
     """
 
     def __init__(self, engine: CdcEngine, table: str, group_col: str, path: str):
@@ -62,37 +69,42 @@ class IncrementalGroupCount:
         self.group_col = group_col
         self.path = path
         self.pk = engine.primary_keys[table]
-        grp_fields = [f for f in engine.tables[table].fields if f.name == group_col]
-        if not grp_fields:
+        if not any(f.name == group_col for f in engine.tables[table].fields):
             raise ValueError(f"{group_col!r} not in {table!r} schema")
-        self._grp_type = grp_fields[0].dataType
 
     # -- storage (group-cardinality data: tiny at any base-table scale) ----
-    def _data_path(self) -> str:
-        return os.path.join(self.path, "data")
+    def _pointer(self) -> dict:
+        try:
+            with open(os.path.join(self.path, "_POINTER.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"version": -1, "replica_version": None}
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self._data_path())
+        v = self._pointer()["version"]
+        return spark.read.parquet(os.path.join(self.path, f"v{v}"))
 
-    def _write(self, df: DataFrame) -> None:
-        tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex[:8]}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        dst = self._data_path()
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        os.replace(tmp, dst)
+    def _commit(self, df: DataFrame, replica_version: int) -> None:
+        v = self._pointer()["version"] + 1
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(self.path, f"v{v}")
+        )
+        versioned.commit(
+            os.path.join(self.path, "_POINTER.json"),
+            {"version": v, "replica_version": replica_version},
+        )
+        versioned.retire(self.path, v, keep=2)
 
     # -- full compute (bootstrap / repair) ---------------------------------
-    def _full_aggregate(self, spark: SparkSession) -> DataFrame:
-        live = self.engine.store.read(spark, self.table).filter(
+    def initialize(self, spark: SparkSession) -> None:
+        v = self.engine.store.version(self.table)
+        live = self.engine.store.read(spark, self.table, version=v).filter(
             ~F.col(schemas.META_DELETED)
         )
-        return live.groupBy(F.col(self.group_col).alias("grp")).agg(
+        agg = live.groupBy(F.col(self.group_col).alias("grp")).agg(
             *[expr.alias(name) for name, expr in self._measures()]
         )
-
-    def initialize(self, spark: SparkSession) -> None:
-        self._write(self._full_aggregate(spark))
+        self._commit(agg, v)
 
     # -- measures ----------------------------------------------------------
     def _measures(self) -> list:
@@ -100,26 +112,24 @@ class IncrementalGroupCount:
         return [("n", F.count("*"))]
 
     # -- incremental maintenance -------------------------------------------
-    def _group_state_for_keys(
-        self, spark: SparkSession, keys: DataFrame
-    ) -> DataFrame:
-        """Per-group measure contribution of the given PKs' live rows,
-        read only from the buckets those keys hash into. With no keys,
-        an empty frame with the right schema comes from aggregating the
-        always-false filter of the current table."""
-        buckets = [
+    def _key_buckets(self, keys: DataFrame) -> list[int]:
+        """Replica buckets the keys hash into (bounded by n_buckets)."""
+        return [
             r["b"]
             for r in keys.select(self.engine._bucket(self.pk).alias("b"))
             .distinct()
             .collect()
         ]
-        if not buckets:
-            rows = self.engine.store.read(spark, self.table).filter(F.lit(False))
-        else:
-            part = self.engine.store.read_buckets(spark, self.table, buckets)
-            rows = part.join(
-                F.broadcast(keys), on=self.pk, how="left_semi"
-            ).filter(~F.col(schemas.META_DELETED))
+
+    def _group_state_for_keys(
+        self, spark: SparkSession, keys: DataFrame, buckets: list[int], version: int
+    ) -> DataFrame:
+        """Per-group measure contribution of the given PKs' live rows at
+        replica ``version``, read only from the buckets they hash into."""
+        part = self.engine.store.read_buckets(spark, self.table, buckets, version)
+        rows = part.join(F.broadcast(keys), on=self.pk, how="left_semi").filter(
+            ~F.col(schemas.META_DELETED)
+        )
         return rows.groupBy(F.col(self.group_col).alias("grp")).agg(
             *[expr.alias(name) for name, expr in self._measures()]
         )
@@ -134,66 +144,52 @@ class IncrementalGroupCount:
         if "after" in events.columns:
             events = self.engine.project_after(events, self.table)
         events = events.filter(F.col(self.pk).isNotNull())
+        store = self.engine.store
+        v0 = store.version(self.table)
+        self.engine.merge_batch(spark, self.table, events, sync_ts=sync_ts)
+        v1 = store.version(self.table)
+        reflected = self._pointer()["replica_version"]
+        if reflected == v1:
+            return
+        if reflected != v0:
+            self.initialize(spark)
+            return
         keys = events.select(self.pk).distinct().cache()
-        tmp_before = os.path.join(self.path, f".before-{uuid.uuid4().hex[:8]}")
         try:
-            # The before-state must be MATERIALIZED (written out) before the
-            # merge rewrites the underlying buckets — a lazy DataFrame would
-            # re-read post-merge files and difference the batch against
-            # itself. The write is group-cardinality rows, not data-scale.
-            self._group_state_for_keys(spark, keys).write.mode(
-                "overwrite"
-            ).parquet(tmp_before)
-            self.engine.merge_batch(spark, self.table, events, sync_ts=sync_ts)
-            before = spark.read.parquet(tmp_before)
-            after = self._group_state_for_keys(spark, keys)
-            names = [name for name, _ in self._measures()]
-            # Cluster-side delta: union the negated before-contribution with
-            # the after-contribution and let groupBy fold them. groupBy treats
-            # NULL as an ordinary group, so NULL-group rows difference
-            # correctly (no driver-side dict, no collect of group state).
-            keep_any = None
-            delta = (
-                before.select(
-                    "grp", *[(-F.col(m)).alias(m) for m in names]
-                )
-                .unionByName(after.select("grp", *names))
-                .groupBy("grp")
-                .agg(*[F.sum(m).alias(m) for m in names])
-            )
-            for m in names:
-                cond = F.col(m) != 0
-                keep_any = cond if keep_any is None else (keep_any | cond)
-            delta = delta.filter(keep_any).cache()
-            try:
-                if delta.isEmpty():
-                    return
-                mv = self.read(spark)
-                # eqNullSafe: a plain equi-join never matches NULL keys, which
-                # would leave two diverging NULL-group rows in the store.
-                merged = (
-                    mv.join(
-                        delta, mv["grp"].eqNullSafe(delta["grp"]), "full_outer"
-                    )
-                    .select(
-                        F.coalesce(mv["grp"], delta["grp"]).alias("grp"),
-                        *[
-                            (
-                                F.coalesce(mv[m], F.lit(0))
-                                + F.coalesce(delta[m], F.lit(0))
-                            ).alias(m)
-                            for m in names
-                        ],
-                    )
-                    .filter(F.col("n") != 0)
-                )
-                self._write(merged)
-            finally:
-                delta.unpersist()
+            buckets = self._key_buckets(keys)
+            before = self._group_state_for_keys(spark, keys, buckets, v0)
+            after = self._group_state_for_keys(spark, keys, buckets, v1)
+            self._commit(self._fold(spark, before, after), v1)
         finally:
             keys.unpersist()
-            if os.path.exists(tmp_before):
-                shutil.rmtree(tmp_before)
+
+    def _fold(self, spark: SparkSession, before: DataFrame, after: DataFrame) -> DataFrame:
+        """The new MV: the stored one plus (after - before). Cluster-side:
+        the negated before-contribution unions with the after one and
+        groupBy folds them. groupBy treats NULL as an ordinary group, so
+        NULL-group rows difference correctly (no driver-side dict, no
+        collect of group state)."""
+        names = [name for name, _ in self._measures()]
+        delta = (
+            before.select("grp", *[(-F.col(m)).alias(m) for m in names])
+            .unionByName(after.select("grp", *names))
+            .groupBy("grp")
+            .agg(*[F.sum(m).alias(m) for m in names])
+        )
+        mv = self.read(spark)
+        # eqNullSafe: a plain equi-join never matches NULL keys, which
+        # would leave two diverging NULL-group rows in the store.
+        return (
+            mv.join(delta, mv["grp"].eqNullSafe(delta["grp"]), "full_outer")
+            .select(
+                F.coalesce(mv["grp"], delta["grp"]).alias("grp"),
+                *[
+                    (F.coalesce(mv[m], F.lit(0)) + F.coalesce(delta[m], F.lit(0))).alias(m)
+                    for m in names
+                ],
+            )
+            .filter(F.col("n") != 0)
+        )
 
     # -- streaming wrapper ---------------------------------------------------
     def start_stream(
@@ -341,83 +337,42 @@ class IncrementalGroupMinMax(IncrementalGroupCount):
             ("mx", F.max(v)),
         ]
 
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        events: DataFrame,
-        sync_ts: str | None = None,
-    ) -> None:
-        if "after" in events.columns:
-            events = self.engine.project_after(events, self.table)
-        events = events.filter(F.col(self.pk).isNotNull())
-        keys = events.select(self.pk).distinct().cache()
-        tmp_before = os.path.join(self.path, f".before-{uuid.uuid4().hex[:8]}")
-        try:
-            # before-state materialized pre-merge (see IncrementalGroupCount)
-            self._group_state_for_keys(spark, keys).write.mode(
-                "overwrite"
-            ).parquet(tmp_before)
-            self.engine.merge_batch(spark, self.table, events, sync_ts=sync_ts)
-            before = spark.read.parquet(tmp_before)
-            after = self._group_state_for_keys(spark, keys)
-
-            shrink = before.select("grp").distinct().cache()
-            grow = (
-                after.alias("a")
-                .join(
-                    shrink.alias("s"),
-                    F.col("a.grp").eqNullSafe(F.col("s.grp")),
-                    "left_anti",
-                )
-                .cache()
+    def _fold(self, spark: SparkSession, before: DataFrame, after: DataFrame) -> DataFrame:
+        # SHRINK groups had a live batch key before the merge; GROW groups
+        # only gained rows
+        shrink = before.select("grp").distinct()
+        grow = after.alias("a").join(
+            shrink.alias("s"),
+            F.col("a.grp").eqNullSafe(F.col("s.grp")),
+            "left_anti",
+        )
+        mv = self.read(spark)
+        touched = shrink.unionByName(grow.select("grp")).distinct()
+        untouched = mv.alias("m").join(
+            touched.alias("t"),
+            F.col("m.grp").eqNullSafe(F.col("t.grp")),
+            "left_anti",
+        )
+        # GROW: stored (if any) extended by the batch contribution
+        g, m = grow.alias("g"), mv.alias("m")
+        grown = g.join(m, F.col("g.grp").eqNullSafe(F.col("m.grp")), "left").select(
+            F.col("g.grp").alias("grp"),
+            (F.coalesce(F.col("m.n"), F.lit(0)) + F.col("g.n")).alias("n"),
+            F.least(F.col("m.mn"), F.col("g.mn")).alias("mn"),
+            F.greatest(F.col("m.mx"), F.col("g.mx")).alias("mx"),
+        )
+        # SHRINK: recompute exactly those groups from live rows
+        live = self.engine.store.read(spark, self.table).filter(
+            ~F.col(schemas.META_DELETED)
+        )
+        rec = (
+            live.alias("l")
+            .join(
+                shrink.alias("s"),
+                F.col(f"l.{self.group_col}").eqNullSafe(F.col("s.grp")),
+                "left_semi",
             )
-            try:
-                if shrink.isEmpty() and grow.isEmpty():
-                    return
-                mv = self.read(spark)
-                touched = shrink.unionByName(grow.select("grp")).distinct()
-                untouched = mv.alias("m").join(
-                    touched.alias("t"),
-                    F.col("m.grp").eqNullSafe(F.col("t.grp")),
-                    "left_anti",
-                )
-                # GROW: stored (if any) extended by the batch contribution
-                mv_grow = mv.alias("m").join(
-                    grow.select("grp").alias("g"),
-                    F.col("m.grp").eqNullSafe(F.col("g.grp")),
-                    "left_semi",
-                )
-                g, m = grow.alias("g"), mv_grow.alias("m")
-                grown = (
-                    g.join(m, F.col("g.grp").eqNullSafe(F.col("m.grp")), "left")
-                    .select(
-                        F.col("g.grp").alias("grp"),
-                        (
-                            F.coalesce(F.col("m.n"), F.lit(0)) + F.col("g.n")
-                        ).alias("n"),
-                        F.least(F.col("m.mn"), F.col("g.mn")).alias("mn"),
-                        F.greatest(F.col("m.mx"), F.col("g.mx")).alias("mx"),
-                    )
-                )
-                # SHRINK: recompute exactly those groups from live rows
-                live = self.engine.store.read(spark, self.table).filter(
-                    ~F.col(schemas.META_DELETED)
-                )
-                rec = (
-                    live.alias("l")
-                    .join(
-                        shrink.alias("s"),
-                        F.col(f"l.{self.group_col}").eqNullSafe(F.col("s.grp")),
-                        "left_semi",
-                    )
-                    .groupBy(F.col(f"l.{self.group_col}").alias("grp"))
-                    .agg(*[e.alias(nm) for nm, e in self._measures()])
-                )
-                self._write(untouched.unionByName(grown).unionByName(rec))
-            finally:
-                shrink.unpersist()
-                grow.unpersist()
-        finally:
-            keys.unpersist()
-            if os.path.exists(tmp_before):
-                shutil.rmtree(tmp_before)
+            .groupBy(F.col(f"l.{self.group_col}").alias("grp"))
+            .agg(*[e.alias(nm) for nm, e in self._measures()])
+        )
+        return untouched.unionByName(grown).unionByName(rec)

@@ -1,11 +1,13 @@
+"""Streaming NEAR-dup ingest filter (streaming/dedup.py): incremental
+LSH banding with a persisted signature store — the streaming face of
+dd4 (exact-dup streaming lives in test_stateful_streaming.py)."""
+
 import pytest
 
 # driver-budget default excludes this heavyweight suite (pytest.ini);
 # builders run it via `-m ""` before shipping engine changes
 pytestmark = pytest.mark.slow
-"""Streaming NEAR-dup ingest filter (streaming/dedup.py): incremental
-LSH banding with a persisted signature store — the streaming face of
-dd4 (exact-dup streaming lives in test_stateful_streaming.py)."""
+
 
 def test_streaming_neardup_filter_across_batches_and_restarts(spark, tmp_path):
     """LSH near-dup ingest filter (streaming/dedup.py): a doc colliding
