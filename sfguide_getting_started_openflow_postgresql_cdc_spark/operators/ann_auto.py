@@ -187,8 +187,8 @@ def _ann_cache_key(df: DataFrame):
             df.sparkSession.sparkContext.applicationId,
             df._jdf.queryExecution().analyzed().semanticHash(),
         )
-    except Exception:  # Connect or a future API change: fall back to id
-        return (id(df),)
+    except Exception:  # Connect or a future API change: untrackable
+        return None
 
 
 def release_ann_cache() -> None:
@@ -222,9 +222,9 @@ def _augmented(
     same inputs — bit-identical. Every entry point routes through here
     (the inline-norm fallback in :func:`_verified_sims` is reachable
     only when a caller passes a frame that already carries the
-    augmented columns). Persisted frames register in the LRU-capped
-    ``_ANN_CACHE`` above so distinct corpora cannot accumulate
-    unreleased cache entries; ``release_ann_cache()`` drops them all."""
+    augmented columns). Frames this function persists register in the
+    LRU-capped ``_ANN_CACHE`` above so distinct corpora cannot
+    accumulate unreleased cache entries; ``release_ann_cache()`` drops them all."""
     from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.similarity import (
         arrow_band_buckets_param,
         arrow_norm,
@@ -243,17 +243,18 @@ def _augmented(
     key = _ann_cache_key(out)
     if key in _ANN_CACHE:
         _ANN_CACHE[key] = _ANN_CACHE.pop(key)  # refresh LRU position
-    else:
-        _ANN_CACHE[key] = out
-        while len(_ANN_CACHE) > _ANN_CACHE_MAX:
-            oldest = next(iter(_ANN_CACHE))
-            old = _ANN_CACHE.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-    if not (out.storageLevel.useMemory or out.storageLevel.useDisk):
-        out.persist()
+    if key is None or out.storageLevel.useMemory or out.storageLevel.useDisk:
+        # cached already (by an earlier call or by the caller, who owns
+        # it) or untrackable: eviction must not drop a foreign persist
+        return out
+    out.persist()
+    _ANN_CACHE[key] = out
+    while len(_ANN_CACHE) > _ANN_CACHE_MAX:
+        old = _ANN_CACHE.pop(next(iter(_ANN_CACHE)))
+        try:
+            old.unpersist()
+        except Exception:
+            pass
     return out
 
 

@@ -126,40 +126,12 @@ from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup impor
 from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.registry import (
     query,
 )
+from sfguide_getting_started_openflow_postgresql_cdc_spark.session import run_concurrently
 from sfguide_getting_started_openflow_postgresql_cdc_spark.sources.loader import (
     load_table,
 )
 
 IDX_BUCKET = "_IDX_BUCKET"
-
-
-def _run_concurrently(jobs) -> list:
-    """Run independent write jobs from driver threads so their Spark
-    jobs schedule concurrently (SparkSession is thread-safe; each job's
-    inputs are cached frames or snapshot-pinned file lists, so ordering
-    within the group is immaterial). Serial submission pays one per-job
-    scheduling floor per table — the dominant micro-batch ingest cost
-    on an otherwise idle cluster. Returns the jobs' results in order.
-    Every job runs to completion before anything is raised, so no
-    failure hides behind another: the first failing job's exception
-    propagates with the others attached as notes. Siblings are NOT
-    cancelled — a failed operation may leave any subset of its group's
-    writes on disk. That partial state is harmless by construction: COW
-    versions and log segments both land in not-yet-committed ``v{new}``
-    dirs that reads (manifest-gated) cannot see, and a retry overwrites
-    them — see ``_append``."""
-    if len(jobs) <= 1:
-        return [j() for j in jobs]
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [ex.submit(j) for j in jobs]
-    errors = [f.exception() for f in futures if f.exception() is not None]
-    if errors:
-        for other in errors[1:]:
-            errors[0].add_note(f"concurrent job also failed: {other!r}")
-        raise errors[0]
-    return [f.result() for f in futures]
 
 
 def _shingle_batch(docs: DataFrame) -> DataFrame:
@@ -652,7 +624,7 @@ class MinHashLshIndex:
         # cands append stays in the FINAL wave: it reads `new_cands`,
         # which the probe is materializing — running them concurrently
         # would compute the candidate join twice (cache race).
-        cross_and_vk = _run_concurrently(
+        cross_and_vk = run_concurrently(
             [
                 _probe,
                 lambda: self._append(
@@ -825,7 +797,7 @@ class MinHashLshIndex:
         cow_jobs.append(
             lambda: self._append("cands", new_cands, version=new_version)
         )
-        _run_concurrently(cow_jobs)
+        run_concurrently(cow_jobs)
         self._clear_orphan_segments(
             new_version, wrote={"shingles", "bands", "cands"}
         )

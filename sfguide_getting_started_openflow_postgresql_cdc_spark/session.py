@@ -64,3 +64,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(jobs) -> list:
+    """Run independent jobs from driver threads so their Spark jobs
+    schedule concurrently (SparkSession is thread-safe) instead of each
+    paying its own scheduling floor in turn. Returns the results in
+    order. Jobs inherit the caller's local properties (job group,
+    description, pool), so cancelling the group — a streaming query's
+    ``stop()`` — reaches them. Every job runs to completion (siblings
+    are not cancelled, so a failure may leave any subset of the jobs'
+    writes on disk); then the first failure raises, the others attached
+    as notes."""
+    if len(jobs) <= 1:
+        return [j() for j in jobs]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    session = SparkSession.getActiveSession()
+    if session is not None:
+        inherit = inheritable_thread_target(session)
+        jobs = [inherit(j) for j in jobs]
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        futures = [ex.submit(j) for j in jobs]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(f"concurrent job also failed: {other!r}")
+        raise errors[0]
+    return [f.result() for f in futures]

@@ -35,27 +35,32 @@ Every committed version stays a complete snapshot, so consumers such as
 the MVs (``streaming/mv.py``) difference a batch by reading its keys at
 the version before and the version after the merge (time travel).
 
-The merge itself is pure DataFrame algebra:
+The merge itself is pure DataFrame algebra with ONE shuffle:
 
-1. reduce the batch to the LATEST event per PK
-   (``row_number() over (partition by pk order by seq_no desc)``);
-2. guard every row with a stored per-row version (``_CDC_SEQ``): an
+1. union the changed buckets' stored rows (packed as a struct ``r``)
+   with the batch's events (packed as a struct ``e``) and repartition
+   by ``_CDC_BUCKET`` — the same exchange the bucket-partitioned write
+   needs anyway, so the merge adds no shuffle of its own;
+2. group by ``(_CDC_BUCKET, pk)`` inside those partitions:
+   ``any_value(r)`` is the stored row, ``max_by(e, seq_no)`` the
+   latest event of the interval for that key;
+3. guard every key with its stored per-row version (``_CDC_SEQ``): an
    event lands only if its ``seq_no`` beats the row's current version.
    This makes the merge idempotent under at-least-once ``foreachBatch``
    replay AND correct under out-of-order micro-batch delivery (global
    file/offset ordering is not guaranteed in a distributed source);
-3. ``replica LEFT JOIN broadcast(latest)`` applies updates/soft-deletes
-   without shuffling the replica — at 100 TB the big side streams
-   map-side past a broadcast of the (small) per-interval change set;
-4. ``latest ANTI JOIN replica-keys`` yields brand-new rows to append.
+4. emit one row per key: a landed I/U takes the post-image, a landed D
+   keeps the stored values and sets the soft-delete flag, a D for an
+   unseen key writes a PK-only tombstone, other keys copy through.
 
-When a batch is genuinely huge (initial backfill), drop the broadcast
-hint via ``broadcast_threshold_rows``; Catalyst then plans a shuffle
-join, and a PK-bucketed replica layout keeps it co-located.
+No broadcast, window or join: a batch of any size, from a few scripted
+events to an initial backfill, takes the same plan over the changed
+buckets only.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -68,6 +73,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from sfguide_getting_started_openflow_postgresql_cdc_spark import schemas, versioned
+from sfguide_getting_started_openflow_postgresql_cdc_spark.session import run_concurrently
 
 # Raw JSONL change-event envelope: ``after`` is a string map so one
 # schema carries every table's events; per-table projection casts each
@@ -365,7 +371,6 @@ class CdcEngine:
         store: ReplicaStore,
         tables: dict[str, T.StructType] | None = None,
         primary_keys: dict[str, str] | None = None,
-        broadcast_threshold_rows: int = 5_000_000,
         write_partitions: int | None = None,
         n_buckets: int = 16,
         auto_compact_max_files: int | None = None,
@@ -378,7 +383,6 @@ class CdcEngine:
         self.access = access
         self.tables = tables or schemas.HEALTHCARE_TABLES
         self.primary_keys = primary_keys or schemas.PRIMARY_KEYS
-        self.broadcast_threshold_rows = broadcast_threshold_rows
         # Output-file sizing: None lets AQE pick; small reference-scale
         # tables should pass 1 to avoid a spray of KB-sized files. At
         # cluster scale, size so files land ~128 MB-1 GB each.
@@ -599,10 +603,10 @@ class CdcEngine:
             events = self.project_after(events, table)
         pk = self.primary_keys[table]
         # A malformed payload whose PK fails try_cast lands as NULL; a
-        # NULL key never matches the anti join against replica keys and
-        # would be re-appended as a garbage row on every batch. Drop such
-        # events from the merge — the raw journal (appended before the
-        # merge) retains them for quarantine/inspection.
+        # NULL key never matches a stored row and would be written as a
+        # new garbage row on every batch. Drop such events from the
+        # merge — the raw journal (appended before the merge) retains
+        # them for quarantine/inspection.
         # Unknown ops are likewise quarantined-not-applied: treating a
         # corrupt op byte as an upsert would materialize garbage state.
         events = events.filter(
@@ -637,80 +641,55 @@ class CdcEngine:
             else F.lit(stats["max_ts"]).cast("timestamp_ntz")
         )
 
-        # latest event per PK wins within the interval (SURVEY.md §3:
-        # row_number over seq_no desc).
-        w = Window.partitionBy(pk).orderBy(F.col("seq_no").desc())
-        latest = (
-            events.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # broadcast only the probe side of the left join (anti join below
-        # builds on the right side, where the hint would be unsupported)
-        latest_hinted = (
-            F.broadcast(latest)
-            if stats["n"] <= self.broadcast_threshold_rows
-            else latest
-        )
-
-        # Partition-pruned read: only the changed buckets' files are
-        # listed/scanned; untouched buckets never enter the plan.
+        # One shuffle (module docstring): the partition-pruned stored rows
+        # and the events meet in the repartition the bucket write needs;
+        # hash-partitioning on _CDC_BUCKET already clusters every
+        # (bucket, pk) group, so the aggregate adds no exchange.
         replica = self.store.read_buckets(spark, table, changed_buckets)
         src_fields = [f.name for f in self.tables[table].fields]
-        r, e = replica.alias("r"), latest_hinted.alias("e")
+        key = [self._bucket(pk).alias(CDC_BUCKET), F.col(pk)]
+        keyed = (
+            replica.select(*key, F.struct(*replica.columns).alias("r"))
+            .unionByName(
+                events.select(*key, F.struct("seq_no", "op", *src_fields).alias("e")),
+                allowMissingColumns=True,
+            )
+            .repartition(self.write_partitions or self.n_buckets, F.col(CDC_BUCKET))
+            .groupBy(CDC_BUCKET, pk)
+            .agg(
+                F.any_value("r", ignoreNulls=True).alias("r"),
+                # latest event per PK wins within the interval
+                F.max_by("e", "e.seq_no").alias("e"),
+            )
+        )
+        r, e = F.col("r"), F.col("e")
+        new_key = r.isNull()
         # Per-row version guard: an event lands only if its seq_no beats
         # the row's stored _CDC_SEQ. This makes the merge idempotent under
         # replay AND correct under out-of-order micro-batch delivery —
         # global ordering is not guaranteed once ingestion is distributed.
-        applies = F.col("e.op").isNotNull() & (
-            F.col("e.seq_no") > F.col(f"r.{CDC_SEQ}")
-        )
-        op = F.when(applies, F.col("e.op"))  # null unless the event lands
-
-        # existing rows: keep values on D (soft delete), take post-image on I/U
-        updated = r.join(e, F.col(f"r.{pk}") == F.col(f"e.{pk}"), "left").select(
-            *[
-                F.when(op.isNull() | (op == "D"), F.col(f"r.{c}"))
-                .otherwise(F.col(f"e.{c}"))
-                .alias(c)
-                for c in src_fields
-            ],
-            F.col(f"r.{schemas.META_INSERTED_AT}").alias(schemas.META_INSERTED_AT),
-            F.when(op.isNull(), F.col(f"r.{schemas.META_UPDATED_AT}"))
+        # ``op`` is null unless the key's event lands.
+        op = F.when(new_key | (e["seq_no"] > r[CDC_SEQ]), e["op"])
+        # Stored rows keep their values unless the event lands as I/U
+        # (D is a SOFT delete). A D for a never-seen key materializes a
+        # PK-only tombstone, so a late-arriving lower-seq INSERT for the
+        # same key is correctly suppressed by the version guard.
+        keep = ~new_key & (op.isNull() | (op == "D"))
+        merged = keyed.select(
+            *[F.when(keep, r[c]).otherwise(e[c]).alias(c) for c in src_fields],
+            F.when(new_key, sync_col)
+            .otherwise(r[schemas.META_INSERTED_AT])
+            .alias(schemas.META_INSERTED_AT),
+            F.when(op.isNull(), r[schemas.META_UPDATED_AT])
+            .when(new_key & (op == "I"), F.lit(None).cast("timestamp_ntz"))
             .otherwise(sync_col)
             .alias(schemas.META_UPDATED_AT),
-            F.when(op.isNull(), F.col(f"r.{schemas.META_DELETED}"))
+            F.when(op.isNull(), r[schemas.META_DELETED])
             .otherwise(op == "D")
             .alias(schemas.META_DELETED),
-            F.when(op.isNull(), F.col(f"r.{CDC_SEQ}"))
-            .otherwise(F.col("e.seq_no"))
-            .alias(CDC_SEQ),
+            F.when(op.isNull(), r[CDC_SEQ]).otherwise(e["seq_no"]).alias(CDC_SEQ),
+            F.col(CDC_BUCKET),
         )
-        # Brand-new keys: inserts. A D for a never-seen key materializes a
-        # PK-only tombstone so a late-arriving lower-seq INSERT for the
-        # same key is correctly suppressed by the version guard.
-        inserts = (
-            latest.join(replica.select(pk), on=pk, how="left_anti")
-            .select(
-                *[F.col(c) for c in src_fields],
-                sync_col.alias(schemas.META_INSERTED_AT),
-                F.when(F.col("op").isin("U", "D"), sync_col)
-                .otherwise(F.lit(None).cast("timestamp_ntz"))
-                .alias(schemas.META_UPDATED_AT),
-                (F.col("op") == "D").alias(schemas.META_DELETED),
-                F.col("seq_no").alias(CDC_SEQ),
-            )
-        )
-        merged = updated.unionByName(inserts.select(*updated.columns)).withColumn(
-            CDC_BUCKET, self._bucket(pk)
-        )
-        if self.write_partitions:
-            merged = merged.coalesce(self.write_partitions)
-        else:
-            # co-locate each bucket in one task: every task then writes
-            # one file per bucket it owns instead of every task writing a
-            # sliver of every bucket (32 tasks x 16 buckets = 512 files)
-            merged = merged.repartition(self.n_buckets, F.col(CDC_BUCKET))
         self.store.write_merged(
             spark,
             table,
@@ -741,19 +720,32 @@ class CdcEngine:
 
     # -- batch driver ------------------------------------------------------------
     def apply_envelope_batch(self, spark: SparkSession, batch: DataFrame) -> None:
-        """Process one micro-batch of mixed-table envelope rows: journal
-        first (append-only, replay-tolerant), then merge each table."""
+        """Process one micro-batch of mixed-table envelope rows. Each
+        table present is one unit — project, append its journal, merge,
+        maybe compact — and the units run concurrently: tables share no
+        state, so their per-job scheduling floors overlap instead of
+        adding up.
+
+        Inside a unit the journal append finishes BEFORE the merge's
+        pointer commit. ``index_sync.sync_soft_deletes`` reads the
+        journal only up to the replica's watermark and then records that
+        watermark as done; a replica committed ahead of its journal
+        would let a sync pass over deletes not yet in the log, and skip
+        them forever. A unit whose append or merge fails leaves its
+        table's pointer untouched (the other tables still commit) and the
+        first failure propagates; replaying the batch is safe — the merge
+        is idempotent and journal reads dedup replayed events."""
         batch.persist()
         try:
             present = [
                 row["table_name"]
                 for row in batch.select("table_name").distinct().collect()
             ]
-            for table in present:
-                if table not in self.tables:
-                    continue
-                sub = batch.filter(F.col("table_name") == table)
-                typed = self.project_after(sub, table)
+
+            def unit(table: str) -> None:
+                typed = self.project_after(
+                    batch.filter(F.col("table_name") == table), table
+                )
                 typed.persist()
                 try:
                     self.append_journal(table, typed)
@@ -761,6 +753,10 @@ class CdcEngine:
                 finally:
                     typed.unpersist()
                 self.maybe_compact_journal(spark, table)
+
+            run_concurrently(
+                [functools.partial(unit, t) for t in present if t in self.tables]
+            )
         finally:
             batch.unpersist()
 

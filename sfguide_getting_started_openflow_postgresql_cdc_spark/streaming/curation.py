@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sfguide_getting_started_openflow_postgresql_cdc_spark import versioned
+from sfguide_getting_started_openflow_postgresql_cdc_spark.session import run_concurrently
 
 FP_BUCKET = "_FP_BUCKET"
 
@@ -677,13 +678,9 @@ class IncrementalCurationManifest:
             # dedicated count job is pure serial wall. Keep the race.
             if collect_metrics:
                 metrics["kept_docs"] = corpus.count()
-            from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
-                _run_concurrently,
-            )
-
             stats_lang = _stat_merge("stats_lang", "lang")
             stats_source = _stat_merge("stats_source", "source")
-            _run_concurrently(
+            run_concurrently(
                 [
                     lambda: self._write("manifest", merged_manifest, new_version),
                     lambda: self._write("totals", merged_totals, new_version),

@@ -1,7 +1,8 @@
 """Crash-point matrix: every state engine reaches the clean-run answer
 after a crash at ANY ``versioned.commit`` of an operation followed by an
-at-least-once replay of the same input — the three MVs, the MinHash
-index ingest and the curation ingest. An MV merge starts with the
+at-least-once replay of the same input — the three MVs, a two-table
+envelope batch (whose tables apply concurrently), the MinHash index
+ingest and the curation ingest. An MV merge starts with the
 replica merge, so commit 1 of each MV case is the replica's pointer
 and the replica rows are part of the compared state. Small inputs so
 the whole matrix stays in the default (non-``slow``) selection.
@@ -12,6 +13,7 @@ leave the MV at [(a, 1), (b, 1)] forever, where the truth is [(a, 3)]."""
 
 import os
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import types as T
@@ -90,6 +92,23 @@ def _mv(make):
     return setup
 
 
+def _envelope(spark, root, build):
+    eng = _cdc(spark, root, build, tables=("t", "u"))
+    batch = _events(spark, _BATCH).unionByName(
+        _events(spark, [(3, "D", 1, None, 0), (4, "I", 9, "c", 90)], "u")
+    )
+    return (
+        lambda: eng.apply_envelope_batch(spark, batch),
+        lambda: [
+            (
+                _rows(eng.store.read(spark, t)),
+                _rows(eng.store.read_journal(spark, t, dedup=True, pk="id")),
+            )
+            for t in ("t", "u")
+        ],
+    )
+
+
 def _minhash(spark, root, build):
     idx = MinHashLshIndex(
         spark, os.path.join(root, "idx"), cap=5, threshold=0.2, n_buckets=4
@@ -135,6 +154,7 @@ ENGINES = {
     "mv_count": _mv(lambda e, p: mv.IncrementalGroupCount(e, "t", "grp", p)),
     "mv_sum": _mv(lambda e, p: mv.IncrementalGroupSum(e, "t", "grp", "v", p)),
     "mv_minmax": _mv(lambda e, p: mv.IncrementalGroupMinMax(e, "t", "grp", "v", p)),
+    "envelope_two_tables": _envelope,
     "minhash_ingest": _minhash,
     "curation_ingest": _curation,
 }
@@ -149,14 +169,18 @@ MV_TRUTH = {
 
 class _CrashAt:
     """Stand-in for ``versioned.commit`` that raises on its k-th call
-    (never, when k is None) and counts calls."""
+    (never, when k is None) and counts calls — from any thread, since
+    an envelope batch commits its tables concurrently."""
 
     def __init__(self, real, k=None):
         self.real, self.k, self.calls = real, k, 0
+        self.lock = threading.Lock()
 
     def __call__(self, path, obj):
-        self.calls += 1
-        if self.calls == self.k:
+        with self.lock:
+            self.calls += 1
+            call = self.calls
+        if call == self.k:
             raise RuntimeError(f"crash at commit {self.k}")
         self.real(path, obj)
 

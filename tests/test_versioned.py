@@ -1,6 +1,6 @@
 """versioned.py — the one commit protocol every state engine uses — and
 the concurrent write wave that runs before a commit. Pure filesystem and
-thread checks; no Spark session."""
+thread checks; only the job-group case starts Spark."""
 
 import json
 import os
@@ -70,12 +70,13 @@ def test_link_unchanged_shares_inodes_and_skips_changed(tmp_path):
     assert os.listdir(new / "_B=1") == ["part-9.parquet"]
 
 
-def test_commit_wave_surfaces_every_failure():
+def test_commit_wave_surfaces_every_failure(spark):
     """A failing job in a concurrent commit wave does not hide a sibling's
     failure: every job finishes, the first failure raises, the others
-    ride along as notes."""
-    from sfguide_getting_started_openflow_postgresql_cdc_spark.operators.dedup_index import (
-        _run_concurrently,
+    ride along as notes. Pool threads carry the caller's job group, so
+    cancelling the group (a streaming query's ``stop()``) reaches them."""
+    from sfguide_getting_started_openflow_postgresql_cdc_spark.session import (
+        run_concurrently,
     )
 
     def probe():
@@ -86,6 +87,18 @@ def test_commit_wave_surfaces_every_failure():
         raise OSError("append failed")
 
     with pytest.raises(ValueError, match="probe failed") as err:
-        _run_concurrently([probe, append, lambda: 1])
+        run_concurrently([probe, append, lambda: 1])
     assert any("append failed" in n for n in err.value.__notes__)
-    assert _run_concurrently([lambda: 1, lambda: 2]) == [1, 2]
+    assert run_concurrently([lambda: 1, lambda: 2]) == [1, 2]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("wave-group", "concurrent wave")
+    try:
+        counts = run_concurrently(
+            [lambda: spark.range(3).count(), lambda: spark.range(5).count()]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == [3, 5]
+    assert len(sc.statusTracker().getJobIdsForGroup("wave-group")) >= 2
